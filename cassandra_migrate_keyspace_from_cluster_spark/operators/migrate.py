@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources import TABLES, load_table
+from ..sources import TABLES, load_table, parquet_row_count, table_path
 
 # Canonical cross-engine type vocabulary: Spark simpleString → canonical.
 # The DuckDB oracle maps information_schema data_type strings into the
@@ -401,8 +401,10 @@ def table_counts(spark: SparkSession, sf_dir: str, tables=TABLES) -> DataFrame:
     """Row-count validation (A7): one row per table with its count.
 
     Post-copy ``count(source) == count(target)`` is the migrator's
-    cheapest invariant; parquet count() is metadata-only (row-group
-    stats), so this is near-free even at 100 TB.
+    cheapest invariant. Parquet answers a bare count from row-group
+    metadata without decoding pages, but each table still pays a Spark
+    job with one task per part file; ``parquet_row_count`` gives the
+    same number from the footers with no job at all.
     """
     counts = [
         load_table(spark, sf_dir, name).agg(
@@ -450,12 +452,13 @@ def copy_table_compacted(
     Why it matters at 100 TB: a migrator that writes one file per input
     task turns a fragmented source into a fragmented target; every
     downstream scan then pays per-file open/seek overhead. Sizing from
-    a cheap count() (metadata-only on parquet) keeps target files near
-    the optimal ~128 MB-1 GB band regardless of source layout. The
-    repartition is the one (round-robin, balanced) shuffle a compaction
-    copy fundamentally requires."""
+    the source's footer row counts (``parquet_row_count``: no Spark job)
+    keeps target files near the optimal ~128 MB-1 GB band regardless of
+    source layout. The repartition is the one (round-robin, balanced)
+    shuffle a compaction copy fundamentally requires."""
     src = load_table(spark, src_dir, name)
-    n_files = max(1, -(-src.count() // rows_per_file))
+    n_rows = parquet_row_count(table_path(src_dir, name))
+    n_files = max(1, -(-n_rows // rows_per_file))
     dst = os.path.join(dst_dir, f"{name}.parquet")
     src.repartition(n_files).write.mode("overwrite").parquet(dst)
     return spark.read.parquet(dst)
@@ -534,7 +537,7 @@ def migrate_keyspace(
 ) -> DataFrame:
     """The reference's WHOLE JOB as one operator: copy every table of
     the keyspace to the target, then emit the per-table validation
-    report (source count, target re-read count, match flag) — A4 + A7
+    report (source count, target count, match flag) — A4 + A7
     composed over the full keyspace.
 
     Each table's copy is the shuffle-free scan→write pass of
@@ -545,18 +548,21 @@ def migrate_keyspace(
     jobs are SUBMITTED CONCURRENTLY from a thread pool — the standard
     Spark pattern for fleets of small independent jobs (the scheduler
     interleaves them across executors; per-job fixed overhead stops
-    serializing). Counts on the parquet target are metadata-only. The
-    report rows are collected driver-side per TABLE NAME (10 scalars,
-    never data) and emitted as one frame in ``tables`` order."""
+    serializing). Both counts are summed from parquet footers
+    (``parquet_row_count``): the source's part files before the write,
+    and the part files the write committed after it. Neither is a Spark
+    job, so a table costs two jobs, the scan's schema inference and the
+    write. The report rows are collected driver-side per TABLE NAME (10
+    scalars, never data) and emitted as one frame in ``tables`` order."""
     from concurrent.futures import ThreadPoolExecutor
 
     def copy_one(name: str):
         src = load_table(spark, src_dir, name)
-        dst = os.path.join(dst_dir, f"{name}.parquet")
-        n_src = src.count()
+        dst = table_path(dst_dir, name)
+        n_src = parquet_row_count(table_path(src_dir, name))
         n_files = max(1, -(-n_src // 1_000_000))
         src.coalesce(n_files).write.mode("overwrite").parquet(dst)
-        n_dst = spark.read.parquet(dst).count()
+        n_dst = parquet_row_count(dst)
         return (name, n_src, n_dst, n_src == n_dst)
 
     with ThreadPoolExecutor(max_workers=min(8, len(tables))) as ex:

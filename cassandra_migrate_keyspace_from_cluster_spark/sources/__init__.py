@@ -1,1 +1,7 @@
-from .parquet_keyspace import TABLES, load_table, register_views  # noqa: F401
+from .parquet_keyspace import (  # noqa: F401
+    TABLES,
+    load_table,
+    parquet_row_count,
+    register_views,
+    table_path,
+)

@@ -60,31 +60,6 @@ class ClusterConfig:
         return conf
 
 
-@dataclass(frozen=True)
-class CopyTuning:
-    """A5/A10 — scan-split and write-throttle knobs, with defaults that
-    hold at 100-TB scale: ~64 MB splits keep partitions executor-sized;
-    write throughput bounded so the target cluster's compaction keeps up.
-    """
-
-    input_split_size_mb: int = 64
-    output_throughput_mb_per_sec: int = 50
-    output_concurrent_writes: int = 5
-    output_batch_size_rows: str = "auto"
-
-    def spark_conf(self) -> dict[str, str]:
-        return {
-            "spark.cassandra.input.split.sizeInMB": str(self.input_split_size_mb),
-            "spark.cassandra.output.throughputMBPerSec": str(
-                self.output_throughput_mb_per_sec
-            ),
-            "spark.cassandra.output.concurrent.writes": str(
-                self.output_concurrent_writes
-            ),
-            "spark.cassandra.output.batch.size.rows": self.output_batch_size_rows,
-        }
-
-
 def reader_options(
     keyspace: str,
     table: str,

@@ -60,6 +60,16 @@ def list_part_files(path: str) -> list[str]:
     return [path]
 
 
+def parquet_row_count(path: str) -> int:
+    """Exact row count of a table path, summed from the ``num_rows`` of
+    its part files' footers: no Spark job and no data page read, one
+    footer per part file (Spark's ``_SUCCESS`` and ``.crc`` side files
+    are not parts)."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(p).num_rows for p in list_part_files(path))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one keyspace table as a DataFrame (schema from parquet footer).
 

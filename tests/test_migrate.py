@@ -470,3 +470,87 @@ def test_sources_read_directory_shaped_tables(spark, tmp_path):
     replayed = spark.read.parquet(str(out_dir))
     assert replayed.count() == n
     assert replayed.select("event_id").exceptAll(want.select("event_id")).count() == 0
+
+
+def test_parquet_row_count_equals_spark_count(spark, tmp_path):
+    """The footer row count equals Spark's count() on every table shape
+    the engine reads: a single file, a pyarrow multi-part directory with
+    mixed row-group sizes, a Spark-written directory (``_SUCCESS`` and
+    ``.crc`` side files next to the parts), and a 0-row file."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from cassandra_migrate_keyspace_from_cluster_spark.sources import parquet_row_count
+
+    single = f"{SMOKE_SF}/events.parquet"
+    tbl = pq.read_table(single)
+
+    mixed = tmp_path / "mixed.parquet"
+    mixed.mkdir()
+    bounds = [0, 100, 101, tbl.num_rows]
+    for i, rg in enumerate((None, 1, 7)):
+        pq.write_table(tbl.slice(bounds[i], bounds[i + 1] - bounds[i]),
+                       str(mixed / f"part-{i:02d}.parquet"), row_group_size=rg)
+    assert len(pq.ParquetFile(str(mixed / "part-02.parquet")).metadata.to_dict()
+               ["row_groups"]) > 1
+
+    spark_written = str(tmp_path / "spark_written.parquet")
+    spark.read.parquet(f"{SMOKE_SF}/orders.parquet").repartition(3) \
+        .write.parquet(spark_written)
+    side = os.listdir(spark_written)
+    assert "_SUCCESS" in side and any(f.endswith(".crc") for f in side), side
+
+    empty = str(tmp_path / "empty.parquet")
+    pq.write_table(tbl.slice(0, 0), empty)
+
+    for path in (single, str(mixed), spark_written, empty):
+        assert parquet_row_count(path) == spark.read.parquet(path).count(), path
+    assert parquet_row_count(empty) == 0
+
+
+def _last_job_id(spark) -> int:
+    """Highest job id in the core status store, once the listener bus
+    has delivered every event posted so far."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # a Scala Seq
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+
+def test_migrate_keyspace_report_and_job_budget(spark, tmp_path):
+    """The whole-keyspace copy on multi-part tables (one of them 0-row):
+    the report equals independent Spark counts of every source table and
+    every target directory, and the copy submits at most two Spark jobs
+    per table (schema inference and the write; the counts come from
+    parquet footers)."""
+    import pyarrow.parquet as pq
+
+    from cassandra_migrate_keyspace_from_cluster_spark.sources import TABLES
+
+    src_dir, dst_dir = tmp_path / "src", tmp_path / "dst"
+    for name in TABLES:
+        tbl = pq.read_table(f"{SMOKE_SF}/{name}.parquet")
+        if name == "region":
+            tbl = tbl.slice(0, 0)
+        d, n = src_dir / f"{name}.parquet", tbl.num_rows
+        d.mkdir(parents=True)
+        for i in range(3):
+            lo, hi = i * n // 3, (i + 1) * n // 3
+            pq.write_table(tbl.slice(lo, hi - lo), str(d / f"part-{i:02d}.parquet"),
+                           row_group_size=50)
+
+    before = _last_job_id(spark)
+    report = mig.migrate_keyspace(spark, str(src_dir), str(dst_dir))
+    jobs = _last_job_id(spark) - before
+    assert jobs <= 2 * len(TABLES), jobs
+    report = report.collect()
+
+    want = []
+    for name in TABLES:
+        n_src = spark.read.parquet(str(src_dir / f"{name}.parquet")).count()
+        n_dst = spark.read.parquet(str(dst_dir / f"{name}.parquet")).count()
+        want.append((name, n_src, n_dst, True))
+    assert [tuple(r) for r in report] == want
+    assert want[0] == ("region", 0, 0, True)
+    assert all(n > 0 for _, n, _, _ in want[1:])

@@ -22,8 +22,9 @@ byte-exact):
   3. the result collects (rows themselves are whatever the semantics
      say: 0 for per-row/grouped outputs, 1 for global aggregates).
 
-Usage: python tools/empty_input.py [sf_dir]
+Usage: python tools/empty_input.py [sf_dir [query ...]]
        (default: /root/testdata/sf0.001 for the baseline schemas)
+       Query names after sf_dir restrict the check to those queries.
 Prints one line per failure and a final summary; exit 1 on any.
 """
 
@@ -51,17 +52,24 @@ def write_empty_fixtures(sf_dir: str, out_dir: str) -> None:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    names = sys.argv[2:]
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from cassandra_migrate_keyspace_from_cluster_spark.registry import specs
     from cassandra_migrate_keyspace_from_cluster_spark.session import build_session
+
+    all_specs = specs()
+    unknown = [q for q in names if q not in all_specs]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
+    if names:
+        all_specs = {q: all_specs[q] for q in names}
 
     empty_dir = tempfile.mkdtemp(prefix="empty_inv_")
     try:
         write_empty_fixtures(sf_dir, empty_dir)
         spark = build_session(app_name="empty_input")
         spark.sparkContext.setLogLevel("ERROR")
-        all_specs = specs()
 
         t_all = time.time()
         print(f"{len(all_specs)} queries; empty fixtures at {empty_dir}, "
