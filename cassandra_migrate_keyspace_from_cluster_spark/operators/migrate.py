@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources import TABLES, load_table, parquet_row_count, table_path
+from ..util import local_frame
 
 # Canonical cross-engine type vocabulary: Spark simpleString → canonical.
 # The DuckDB oracle maps information_schema data_type strings into the
@@ -79,7 +80,7 @@ def schema_manifest(spark: SparkSession, sf_dir: str, tables=TABLES) -> DataFram
                 field.dataType.simpleString(), field.dataType.simpleString()
             )
             rows.append((name, field.name, i + 1, canonical))
-    return spark.createDataFrame(rows, _MANIFEST_SCHEMA)
+    return local_frame(spark, rows, _MANIFEST_SCHEMA)
 
 
 def copy_table(
@@ -567,7 +568,8 @@ def migrate_keyspace(
 
     with ThreadPoolExecutor(max_workers=min(8, len(tables))) as ex:
         rows = list(ex.map(copy_one, tables))  # preserves tables order
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "table_name string, n_rows_src bigint, n_rows_dst bigint, counts_match boolean",
     )

@@ -23,7 +23,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine, dot, l2_norm, to_double_array
-from ..util import bounded_persist, content_fingerprint, evict_stale_tags, scratch_dir
+from ..util import (
+    bounded_persist,
+    content_fingerprint,
+    evict_stale_tags,
+    local_frame,
+    scratch_dir,
+)
 
 
 def valid_vector(col: str = "embedding"):
@@ -502,7 +508,7 @@ def cosine_topk_chunked(
     else:
         # empty corpus: the partitionBy write emitted no chunk dirs, so
         # no pass ever wrote cand_path — same contract, zero candidates
-        cand = embeddings.sparkSession.createDataFrame([], out_schema)
+        cand = local_frame(embeddings.sparkSession, [], out_schema)
     return _rank_topk(cand, k)
 
 
@@ -574,7 +580,7 @@ def ivf_cosine_topk(
         # KMeans cannot fit 0 rows; an empty corpus has no neighbors —
         # feed the shared merge tail an empty candidate set (identical
         # result schema to the populated path)
-        return _rank_topk(spark.createDataFrame([], cand_schema), k)
+        return _rank_topk(local_frame(spark, [], cand_schema), k)
     # a corpus smaller than the cell count cannot seed n_cells distinct
     # centroids (MLlib fit throws) — the tiny-shard boundary collapses
     # toward one-cell exact search; n_probe is clamped with it
@@ -840,8 +846,8 @@ def brp_lsh_neighbors(
         # LSH fit reads the first row for the vector dim; an empty
         # corpus has no pairs — same result schema, no fit
         idt = dict(d.dtypes)["id"]
-        return d.sparkSession.createDataFrame(
-            [], f"vec_a {idt}, vec_b {idt}, eucl_dist double"
+        return local_frame(
+            d.sparkSession, [], f"vec_a {idt}, vec_b {idt}, eucl_dist double"
         )
     lsh = BucketedRandomProjectionLSH(
         inputCol="features",
@@ -1180,8 +1186,8 @@ def pq_topk(
     if len(sample_pdf) == 0:
         # empty corpus: nothing to train on, nothing to search — same
         # result schema as the ADC scan, zero rows (no staging written)
-        return spark.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, approx_dist double"
+        return local_frame(
+            spark, [], "query_id bigint, neighbor_id bigint, approx_dist double"
         )
     mat = np.vstack(sample_pdf["embedding"].to_numpy()).astype(np.float64)
     mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..operators import migrate as mig
 from ..registry import register
-from ..util import scratch_dir, scratch_dir_unique
+from ..util import local_frame, scratch_dir, scratch_dir_unique
 from .util import r2, t
 
 # DuckDB information_schema data_type → the canonical vocabulary used by
@@ -536,8 +536,8 @@ def a15_repair_apply(spark, sf_dir):
     # row, not an absent row (the oracle — and any consumer of a repair
     # report — keys on the metric name; head3/quiet-day inputs have
     # empty classes)
-    action_spine = spark.createDataFrame(
-        [("copy",), ("recopy",), ("delete",)], "action string"
+    action_spine = local_frame(
+        spark, [("copy",), ("recopy",), ("delete",)], "action string"
     )
     applied = (
         action_spine.join(
@@ -891,8 +891,8 @@ def a20_schema_drift_report(spark, sf_dir):
             rows.append((c, "added", None, s1[c]))
         elif s0[c] != s1[c]:
             rows.append((c, "type_changed", s0[c], s1[c]))
-    return spark.createDataFrame(
-        rows, "column_name string, change string, type_v0 string, type_v1 string"
+    return local_frame(
+        spark, rows, "column_name string, change string, type_v0 string, type_v1 string"
     )
 
 

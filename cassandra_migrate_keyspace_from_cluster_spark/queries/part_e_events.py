@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..functions.finite import in_domain, is_in_domain
 from ..functions.rounding import exact_mean6, sql_exact_mean6
 from ..registry import register
+from ..util import local_frame
 from .util import r2, r6, t
 
 
@@ -908,8 +909,8 @@ def e19_watermark_whatif(spark, sf_dir):
             - F.unix_timestamp(F.date_trunc("second", "ts"))
         ).alias("late_s")
     )
-    thresholds = ev.sparkSession.createDataFrame(
-        [(d,) for d in [0, 5, 10, 30, 60, 240]], "delay_min int"
+    thresholds = local_frame(
+        ev.sparkSession, [(d,) for d in [0, 5, 10, 30, 60, 240]], "delay_min int"
     )
     return (
         late.crossJoin(F.broadcast(thresholds))

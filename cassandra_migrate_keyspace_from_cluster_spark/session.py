@@ -20,6 +20,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# the directory holding this package: Python workers import the worker
+# daemon (and the package's UDF closures) from here, whatever the
+# caller's working directory or PYTHONPATH
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def build_session(
     app_name: str = "cassandra-migrate-keyspace-spark",
@@ -76,6 +81,16 @@ def build_session(
         # r3 fixtures: naive TIMESTAMP(MICROS) must read as TimestampType
         # (see configure_existing) — LTZ-only expressions reject NTZ.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # Python workers fork from pyworker.py, not pyspark.daemon. Every
+        # task's setup_spark_files calls importlib.invalidate_caches(),
+        # and on Python <= 3.12 that re-parses the central directory of
+        # each cached zipimporter: a worker holds 16 (12 over pyspark.zip,
+        # 1,328 entries; 2 over the spark-core jar, 5,359; 2 over py4j),
+        # and one call cost 0.24 CPU s, against 0.1 ms with the daemon's
+        # stat check (Python 3.11, Spark 4.1). Static conf: sessions
+        # built elsewhere (configure_existing) keep the stock daemon.
+        .config("spark.python.daemon.module", f"{__package__}.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
